@@ -526,14 +526,14 @@ def main() -> None:
             # the pyarrow-FS adapter (HDFS path) through its local
             # backend: same protocol, adapter code on the hot path —
             # tracks the adapter's overhead vs the POSIX shim per round
-            from file_appender_spark.sinks.append_text import ArrowFS
+            from file_appender_spark.storefs import ArrowStoreFS
 
             t0 = time.perf_counter()
             append_text(
                 li,
                 AppendSinkConfig(output_dir=os.path.join(td, "arrow"), file_prefix="li"),
                 run_ts_ms=0,
-                fs=ArrowFS("local"),
+                fs=ArrowStoreFS("local"),
             )
             dt_arrow = time.perf_counter() - t0
             extras["append_sink_arrowfs_rows_per_sec"] = int(n_rows / dt_arrow)

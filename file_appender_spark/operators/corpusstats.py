@@ -39,31 +39,25 @@ the scan-everything spelling is pinned in tests/test_corpusstats.py.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from file_appender_spark.storefs import (
-    create_manifest_tables,
-    manifest_version,
-    migrate_tables_to_manifest,
-    refuse_mid_migration,
-    require_atomic_dir_rename,
-    resolve_manifest_dir,
-    store_fs_for,
-    swap_table_dir,
-)
+from file_appender_spark.storefs import EpochStore, store_fs_for
 
-_PARAMS_FILE = "_corpusstats_params.json"
+# the three stats tables; in the MANIFEST layout each carries its own
+# _CURRENT manifest and compaction flips it atomically instead of the
+# two-rename swap — which is what lets the store live on object stores
+_STORE = EpochStore(
+    tables=("token_stats", "source_stats", "bigram_stats"),
+    params_file="_corpusstats_params.json",
+    migrating_marker="_MIGRATING_TO_MANIFEST",
+    kind="corpus-stats",
+    migrate_hint="migrate_corpusstats_to_manifest",
+    debris_suffixes=(".old", ".compacting"),
+)
 _REBUILD_MARKER = "_corpusstats_rebuilding"
-_MIGRATING_MARKER = "_MIGRATING_TO_MANIFEST"
-# the three stats tables; in the MANIFEST layout (r11, lifting the
-# r10 deferral) each carries its own _CURRENT manifest and compaction
-# flips it atomically instead of the two-rename swap — which is what
-# lets the store live on object stores (pairstore.py's discipline)
-_TABLE_NAMES = ("token_stats", "source_stats", "bigram_stats")
 # the one tokenizer every text query shares (queries/llm.py's _WS);
 # version 2 added the bigram table (a v1 store lacks it, so the
 # params guard forces a rebuild rather than failing mid-read)
@@ -225,23 +219,6 @@ def corpusstats_worthwhile(
     )
 
 
-def _stamp_params(store_dir: str) -> None:
-    """(Re)write the tokenizer stamp unconditionally — the build
-    path's prerogative: a full rebuild replaces every table dir, so
-    the store's counts are by construction comparable to the CURRENT
-    tokenizer, whatever stamp an older-version store carried. This is
-    what makes a v1 -> v2 upgrade possible through the API instead of
-    requiring manual deletion of the params file."""
-    fs = store_fs_for(store_dir)
-    fs.makedirs(store_dir)
-    # publish_text: atomic tmp+rename on POSIX/HDFS, one atomic PUT
-    # on object stores (where replace_file would raise)
-    fs.publish_text(
-        os.path.join(store_dir, _PARAMS_FILE),
-        json.dumps(_TOKENIZER, sort_keys=True),
-    )
-
-
 def _refuse_mid_rebuild(store_dir: str) -> None:
     """A crashed rebuild leaves the store part-wiped/part-written; a
     missing params stamp alone cannot distinguish that from a fresh
@@ -259,98 +236,55 @@ def _refuse_mid_rebuild(store_dir: str) -> None:
 
 
 def _check_params(store_dir: str) -> None:
-    """Strict guard for the INGEST/READ paths: counts written under a
-    different tokenizer are incomparable, and these paths only ever
-    add to or read what exists — they must refuse, not re-stamp."""
-    fs = store_fs_for(store_dir)
-    fs.makedirs(store_dir)
+    """Guard for the INGEST path: counts written under a different
+    tokenizer are incomparable, so a mismatched stamp refuses rather
+    than re-stamps. A MISSING stamp is stamped here — ingest may
+    legitimately start a store (the rebuild marker is what tells a
+    crashed rebuild apart from a fresh directory)."""
+    store_fs_for(store_dir).makedirs(store_dir)
     _refuse_mid_rebuild(store_dir)
-    path = os.path.join(store_dir, _PARAMS_FILE)
-    if fs.exists(path):
-        stored = json.loads(fs.read_text(path))
-        if stored != _TOKENIZER:
-            raise ValueError(
-                f"corpus-stats store {store_dir} was built with tokenizer "
-                f"{stored}, this build uses {_TOKENIZER} — counts are "
-                "incomparable; rebuild the store (build_corpus_stats "
-                "re-stamps and replaces all tables)"
-            )
-    else:
-        _stamp_params(store_dir)
-
-
-def _table_base(store_dir: str, name: str) -> str:
-    """The table's UNRESOLVED dir — where its manifest (if any) and
-    version dirs live; only the swap paths need it."""
-    return os.path.join(store_dir, name)
-
-
-def _resolve_table(store_dir: str, name: str) -> str:
-    """The table's LIVE data dir: manifest current version, or the
-    base itself for classic layout."""
-    return resolve_manifest_dir(_table_base(store_dir, name))
+    stored = _STORE.read_params(store_dir)
+    if stored is None:
+        _STORE.stamp_params(store_dir, _TOKENIZER)
+    elif stored != _TOKENIZER:
+        raise ValueError(
+            f"corpus-stats store {store_dir} was built with tokenizer "
+            f"{stored}, this build uses {_TOKENIZER} — counts are "
+            "incomparable; rebuild the store (build_corpus_stats "
+            "re-stamps and replaces all tables)"
+        )
 
 
 def _token_dir(store_dir: str) -> str:
-    return _resolve_table(store_dir, "token_stats")
+    return _STORE.live_dir(store_dir, "token_stats")
 
 
 def _source_dir(store_dir: str) -> str:
-    return _resolve_table(store_dir, "source_stats")
+    return _STORE.live_dir(store_dir, "source_stats")
 
 
 def _bigram_dir(store_dir: str) -> str:
-    return _resolve_table(store_dir, "bigram_stats")
+    return _STORE.live_dir(store_dir, "bigram_stats")
 
 
 def create_manifest_corpusstats(store_dir: str) -> str:
-    """Initialize an EMPTY manifest-layout corpus-stats store (layout
-    is a creation-time choice): each table gets v1 + a ``_CURRENT``
-    manifest. Idempotent and crash-resumable; refuses classic data or
-    classic ``.old`` debris (storefs.create_manifest_tables). The
-    build/ingest entry points call this automatically when the target
-    filesystem lacks atomic directory rename."""
-    return create_manifest_tables(
-        store_dir,
-        _TABLE_NAMES,
-        "corpus-stats",
-        "migrate_corpusstats_to_manifest",
-    )
+    """Initialize an EMPTY manifest-layout corpus-stats store (the
+    layout choice is creation-time; EpochStore.create_manifest has the
+    contract). The build/ingest entry points do this automatically on
+    a filesystem without atomic directory rename."""
+    return _STORE.create_manifest(store_dir)
 
 
 def migrate_corpusstats_to_manifest(store_dir: str) -> str:
-    """Convert a CLASSIC store in place (single-writer window,
-    POSIX/HDFS only — where classic stores can exist). RESUMABLE via
-    the store-level marker; also sweeps classic debris siblings
-    (storefs.migrate_tables_to_manifest has the full contract)."""
-    return migrate_tables_to_manifest(
-        store_dir,
-        _TABLE_NAMES,
-        _MIGRATING_MARKER,
-        "migrate_corpusstats_to_manifest",
-    )
+    """Convert a CLASSIC corpus-stats store in place, resumably
+    (EpochStore.migrate_to_manifest has the contract)."""
+    return _STORE.migrate_to_manifest(store_dir)
 
 
-def _ensure_store_layout(store_dir: str) -> None:
-    """Creation-time layout choice: a NEW store on a filesystem
-    without atomic directory rename must be manifest-layout (its
-    classic swap could never run there); POSIX/HDFS stores default to
-    classic with manifest as the explicit opt-in."""
-    if not store_fs_for(store_dir).supports_atomic_dir_rename:
-        create_manifest_corpusstats(store_dir)
-
-
-def _dirs(store_dir: str) -> tuple[str, str, str]:
-    return (
-        _token_dir(store_dir),
-        _source_dir(store_dir),
-        _bigram_dir(store_dir),
-    )
-
-
-def _write_batch(df: DataFrame, base: str, batch_id: str) -> None:
-    # one partition dir per epoch, overwritten on retry — idempotent
-    df.write.mode("overwrite").parquet(os.path.join(base, f"batch={batch_id}"))
+def _write_tables(docs: DataFrame, store_dir: str, batch_id: str) -> None:
+    _STORE.write_epoch(corpus_token_stats(docs), store_dir, "token_stats", batch_id)
+    _STORE.write_epoch(corpus_source_stats(docs), store_dir, "source_stats", batch_id)
+    _STORE.write_epoch(corpus_bigram_stats(docs), store_dir, "bigram_stats", batch_id)
 
 
 def build_corpus_stats(
@@ -372,8 +306,8 @@ def build_corpus_stats(
     rescan). Production amortizes the build through the incremental
     path anyway, where each batch is scanned once per table at
     micro-batch size."""
-    _recover(store_dir)
-    _ensure_store_layout(store_dir)  # manifest mandatory sans atomic rename
+    _STORE.recover(store_dir)
+    _STORE.ensure_layout(store_dir)  # manifest mandatory sans atomic rename
     # a rebuild replaces all data, so it RE-STAMPS rather than checks
     # (upgrading a store across tokenizer versions goes through here)
     # — but only AFTER the new tables exist: stamp-then-wipe would
@@ -384,16 +318,9 @@ def build_corpus_stats(
     fs.makedirs(store_dir)
     marker = os.path.join(store_dir, _REBUILD_MARKER)
     fs.write_text(marker, "rebuild in progress")
-    old_stamp = os.path.join(store_dir, _PARAMS_FILE)
-    if fs.exists(old_stamp):
-        fs.remove(old_stamp)
-    for d in _dirs(store_dir):
-        if fs.exists(d):
-            fs.rmtree(d)
-    _write_batch(corpus_token_stats(docs), _token_dir(store_dir), "base")
-    _write_batch(corpus_source_stats(docs), _source_dir(store_dir), "base")
-    _write_batch(corpus_bigram_stats(docs), _bigram_dir(store_dir), "base")
-    _stamp_params(store_dir)
+    _STORE.wipe(store_dir)
+    _write_tables(docs, store_dir, "base")
+    _STORE.stamp_params(store_dir, _TOKENIZER)
     fs.remove(marker)  # critical section closed — store is whole again
 
 
@@ -412,98 +339,26 @@ def corpusstats_ingest_batch(
             "batch_id 'base' is reserved for build_corpus_stats — an "
             "ingest epoch writing there would clobber the corpus baseline"
         )
-    _recover(store_dir)
-    _ensure_store_layout(store_dir)  # ingest may legitimately START a store
+    _STORE.recover(store_dir)
+    _STORE.ensure_layout(store_dir)  # ingest may legitimately START a store
     _check_params(store_dir)
-    _write_batch(corpus_token_stats(batch), _token_dir(store_dir), str(batch_id))
-    _write_batch(corpus_source_stats(batch), _source_dir(store_dir), str(batch_id))
-    _write_batch(corpus_bigram_stats(batch), _bigram_dir(store_dir), str(batch_id))
-
-
-# ---------------------------------------------------------------------------
-# Merged-view memoization (r12 verdict item 5, the load_table pattern).
-#
-# Every consumer of a stats table re-planned the parquet read AND
-# re-ran the merge groupBy-sum per action: the bench's 6-consumer
-# fan-out paid ~0.4-0.5s of store-read per consumer on a Zipf-SMALL
-# table (CSBREAK_r13: read_*_stats noop 0.38-0.47s each; the six
-# consumers touch the tables ~10 times). The merged view is a pure
-# function of the table's FILES, so it is memoized per (Spark app,
-# table dir, file fingerprint) as a lazily-localCheckpoint'ed frame:
-# the first consumer's action materializes the (tiny) merged table
-# once, every later consumer scans the checkpointed partitions — the
-# r12 "sides" single-evaluation pattern applied across consumer
-# calls. The fingerprint is the recursive FILE listing: parquet part
-# names are write-unique (task UUIDs), so any append (new epoch dir),
-# overwrite (new part names), compaction swap or migration changes it
-# and the stale entry is dropped. Nothing persists across processes —
-# a fresh session always recomputes from the parquet inputs.
-# ---------------------------------------------------------------------------
-
-_VIEW_CACHE: dict[tuple, DataFrame] = {}
-_VIEW_CACHE_MAX = 24  # tables x stores a session plausibly touches
-
-
-def _table_fingerprint(store_dir: str, table_dir: str) -> tuple:
-    fs = store_fs_for(store_dir)
-    out: list[str] = []
-
-    def walk(p: str, rel: str) -> None:
-        for name in sorted(fs.listdir(p)):
-            sub = os.path.join(p, name)
-            r = rel + "/" + name
-            if fs.isdir(sub):
-                walk(sub, r)
-            else:
-                out.append(r)
-
-    if fs.isdir(table_dir):
-        walk(table_dir, "")
-    return tuple(out)
-
-
-def reset_stats_view_cache() -> None:
-    """Drop every memoized merged view. The cached frames are LOCAL
-    checkpoints (blocks on executors, no lineage): after an executor
-    loss in a long-lived cluster session their actions fail instead
-    of recomputing — call this to fall back to fresh reads. Test
-    seams and the storefs cache reset use it too."""
-    _VIEW_CACHE.clear()
-
-
-def _merged_view(spark: SparkSession, store_dir: str, table_dir: str, build):
-    key = (
-        spark.sparkContext.applicationId,
-        table_dir,
-        _table_fingerprint(store_dir, table_dir),
-    )
-    df = _VIEW_CACHE.get(key)
-    if df is None:
-        # drop stale fingerprints of the same table before inserting
-        for k in [k for k in _VIEW_CACHE if k[:2] == key[:2]]:
-            del _VIEW_CACHE[k]
-        while len(_VIEW_CACHE) >= _VIEW_CACHE_MAX:
-            del _VIEW_CACHE[next(iter(_VIEW_CACHE))]
-        df = build().localCheckpoint(eager=False)
-        _VIEW_CACHE[key] = df
-    return df
+    _write_tables(batch, store_dir, str(batch_id))
 
 
 def read_token_stats(spark: SparkSession, store_dir: str) -> DataFrame:
     """(source, token, tf, df): the merged view over base +
     increments — one map-side-combined groupBy-sum of the stats
-    table, never of the corpus; memoized per file fingerprint (see
-    the block comment above) so repeated consumers share ONE
+    table, never of the corpus; memoized per file fingerprint
+    (EpochStore.merged_view) so repeated consumers share ONE
     materialization. Runs crash recovery first: a read-only consumer
     may be the first process to touch the store after a compaction
     crash, and must not fail on a directory that is one rename from
     healthy."""
-    _recover(store_dir)
+    _STORE.recover(store_dir)
     _refuse_mid_rebuild(store_dir)
     d = _token_dir(store_dir)
-    return _merged_view(
+    return _STORE.merged_view(
         spark,
-        store_dir,
         d,
         lambda: spark.read.parquet(d)
         .groupBy("source", "token")
@@ -515,12 +370,11 @@ def read_token_stats(spark: SparkSession, store_dir: str) -> DataFrame:
 
 
 def read_source_stats(spark: SparkSession, store_dir: str) -> DataFrame:
-    _recover(store_dir)
+    _STORE.recover(store_dir)
     _refuse_mid_rebuild(store_dir)
     d = _source_dir(store_dir)
-    return _merged_view(
+    return _STORE.merged_view(
         spark,
-        store_dir,
         d,
         lambda: spark.read.parquet(d)
         .groupBy("source")
@@ -539,46 +393,16 @@ def read_bigram_stats(spark: SparkSession, store_dir: str) -> DataFrame:
     Note bigram counts are additive across epochs EXCEPT pairs that
     would span two epochs of one document — impossible under the
     whole-documents-per-epoch contract the ingest declares."""
-    _recover(store_dir)
+    _STORE.recover(store_dir)
     _refuse_mid_rebuild(store_dir)
     d = _bigram_dir(store_dir)
-    return _merged_view(
+    return _STORE.merged_view(
         spark,
-        store_dir,
         d,
         lambda: spark.read.parquet(d)
         .groupBy("source", "bigram")
         .agg(F.sum("tf").cast("long").alias("tf")),
     )
-
-
-def _recover(store_dir: str) -> None:
-    """Crash recovery at the head of every entry point, layout-aware
-    (r11, lifting the r10 deferral): MANIFEST-layout tables need no
-    recovery (debris is a stale version dir, cleaned lazily at the
-    next compaction), so a fully manifest store runs on filesystems
-    without atomic directory rename. CLASSIC tables keep the .old
-    restore, which still requires the rename — enforced per table,
-    only when classic data actually exists."""
-    fs = store_fs_for(store_dir)
-    refuse_mid_migration(
-        store_dir,
-        _MIGRATING_MARKER,
-        "corpus-stats",
-        "migrate_corpusstats_to_manifest",
-        manifest_dirs=[_table_base(store_dir, n) for n in _TABLE_NAMES],
-    )
-    for name in _TABLE_NAMES:
-        base = _table_base(store_dir, name)
-        if manifest_version(base) is not None:
-            continue
-        old = base.rstrip("/") + ".old"
-        if fs.exists(base) or fs.exists(old):
-            require_atomic_dir_rename(
-                fs, store_dir, "classic-layout corpus-stats maintenance"
-            )
-        if not fs.exists(base) and fs.exists(old):
-            fs.rename(old, base)
 
 
 def compact_corpus_stats(spark: SparkSession, store_dir: str) -> None:
@@ -587,7 +411,7 @@ def compact_corpus_stats(spark: SparkSession, store_dir: str) -> None:
     on every read. Writer must be paused (the sequential foreachBatch
     loop is the only writer by design); the per-table swap (two
     renames for classic tables, one atomic manifest publish for
-    manifest tables) plus _recover makes a crash at any point
+    manifest tables) plus crash recovery makes a crash at any point
     non-destructive. Output files
     are sized from the store's measured bytes (the compact_store
     discipline) — without this every compaction writes one tiny file
@@ -595,17 +419,11 @@ def compact_corpus_stats(spark: SparkSession, store_dir: str) -> None:
     exists to fix."""
     from file_appender_spark.operators.layout import dir_bytes, plan_file_count
 
-    _recover(store_dir)
+    _STORE.recover(store_dir)
     for name, merged in (
         ("token_stats", read_token_stats(spark, store_dir)),
         ("source_stats", read_source_stats(spark, store_dir)),
         ("bigram_stats", read_bigram_stats(spark, store_dir)),
     ):
-        n = plan_file_count(dir_bytes(spark, _resolve_table(store_dir, name)))
-        # the shared classic-two-rename vs manifest-publish swap
-        swap_table_dir(
-            _table_base(store_dir, name),
-            lambda tmp, m=merged, k=n: m.repartition(k)
-            .write.mode("overwrite")
-            .parquet(os.path.join(tmp, "batch=base")),
-        )
+        n = plan_file_count(dir_bytes(spark, _STORE.live_dir(store_dir, name)))
+        _STORE.compact_swap(store_dir, name, merged, n)

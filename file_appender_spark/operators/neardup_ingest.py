@@ -49,7 +49,16 @@ from file_appender_spark.operators.similarity import (
     _srp_coefs,
     _vec_dim,
 )
-from file_appender_spark.storefs import require_atomic_dir_rename, store_fs_for
+from file_appender_spark.storefs import (
+    MANIFEST_CURRENT_FILE,
+    assert_no_inflight_write,
+    manifest_version,
+    refuse_mid_migration,
+    require_atomic_dir_rename,
+    resolve_manifest_dir,
+    store_fs_for,
+    swap_table_dir,
+)
 
 
 def _store_has_data(store_dir: str) -> bool:
@@ -83,25 +92,11 @@ def _store_has_data(store_dir: str) -> bool:
 # layout is legal on filesystems without atomic directory rename
 # (s3://, gs://; store_fs_for binds them with
 # supports_atomic_dir_rename=False and the classic swap refuses).
-
-# the per-directory manifest primitives are shared with the pair /
-# corpus-stats stores (they version per TABLE); storefs.py is the
-# canonical home, these aliases keep this module's established names
-from file_appender_spark.storefs import (  # noqa: E402
-    MANIFEST_CURRENT_FILE as _CURRENT_FILE,
-    clean_stale_manifest_versions as _clean_stale_versions,
-    manifest_version as _manifest_version,
-)
-
-
-def _resolve_store(store_dir: str) -> str:
-    """Where the store's live data actually is: the manifest's current
-    version dir, or ``store_dir`` itself for classic-layout stores.
-    Every ingest/maintenance entry point resolves ONCE at the top and
-    threads the resolved dir everywhere (params stamp, sidecar, reads,
-    appends), so the two layouts share every other line of code."""
-    v = _manifest_version(store_dir)
-    return store_dir if v is None else os.path.join(store_dir, v)
+#
+# The store is ONE directory, so it uses storefs.py's per-directory
+# manifest primitives directly: every entry point resolves the live
+# dir once (resolve_manifest_dir) and threads it everywhere, so the
+# two layouts share every other line of code.
 
 
 def create_manifest_store(store_dir: str) -> str:
@@ -112,8 +107,8 @@ def create_manifest_store(store_dir: str) -> str:
     object store could otherwise only ever hold a classic store that
     its own compaction would then refuse)."""
     fs = store_fs_for(store_dir)
-    if fs.exists(os.path.join(store_dir, _CURRENT_FILE)):
-        return _resolve_store(store_dir)
+    if fs.exists(os.path.join(store_dir, MANIFEST_CURRENT_FILE)):
+        return resolve_manifest_dir(store_dir)
     _refuse_mid_migration(store_dir)  # half-moved v1 is NOT a fresh store
     if fs.exists(store_dir.rstrip("/") + ".old"):
         # classic crash debris whose ONLY data copy may be the backup;
@@ -129,7 +124,7 @@ def create_manifest_store(store_dir: str) -> str:
             "migrate_store_to_manifest instead"
         )
     fs.makedirs(os.path.join(store_dir, "v1"))
-    fs.publish_text(os.path.join(store_dir, _CURRENT_FILE), "v1")
+    fs.publish_text(os.path.join(store_dir, MANIFEST_CURRENT_FILE), "v1")
     return os.path.join(store_dir, "v1")
 
 
@@ -137,7 +132,7 @@ def create_manifest_store(store_dir: str) -> str:
 # published) must not read as a classic store silently missing
 # history — the marker makes every entry point refuse until a re-run
 # of the (resumable) migration finishes the move (the same discipline
-# as the pair/corpus-stats stores' migrate_tables_to_manifest)
+# as the pair/corpus-stats stores' EpochStore.migrate_to_manifest)
 _MIGRATING_MARKER = "_MIGRATING_TO_MANIFEST"
 
 
@@ -146,8 +141,6 @@ def _refuse_mid_migration(store_dir: str) -> None:
     # SELF-HEALS when the manifest is already published — a crash
     # between the publish and the marker removal leaves a fully
     # consistent store, and the marker is completed-migration debris
-    from file_appender_spark.storefs import refuse_mid_migration
-
     refuse_mid_migration(
         store_dir,
         _MIGRATING_MARKER,
@@ -168,10 +161,10 @@ def migrate_store_to_manifest(store_dir: str) -> str:
     the move. Returns the live data dir."""
     fs = store_fs_for(store_dir)
     marker = os.path.join(store_dir, _MIGRATING_MARKER)
-    if _manifest_version(store_dir) is not None:
+    if manifest_version(store_dir) is not None:
         if fs.exists(marker):
             fs.remove(marker)  # crash between the publish and this
-        return _resolve_store(store_dir)
+        return resolve_manifest_dir(store_dir)
     require_atomic_dir_rename(fs, store_dir, "migrate_store_to_manifest")
     # classic .old recovery inline — _recover_store refuses on the
     # marker this function itself drops
@@ -179,10 +172,10 @@ def migrate_store_to_manifest(store_dir: str) -> str:
     if not fs.exists(store_dir) and fs.exists(old):
         fs.rename(old, store_dir)
     # sweep classic debris no later pass would clean (the shared
-    # migrate_tables_to_manifest discipline): a stale .old BACKUP next
-    # to a live store and an interrupted .compacting output — classic
-    # compaction used to remove both, and it never runs again after
-    # this migration
+    # EpochStore.migrate_to_manifest discipline): a stale .old BACKUP
+    # next to a live store and an interrupted .compacting output —
+    # classic compaction used to remove both, and it never runs again
+    # after this migration
     for suffix in (".old", ".compacting"):
         p = store_dir.rstrip("/") + suffix
         if fs.exists(p):
@@ -195,12 +188,12 @@ def migrate_store_to_manifest(store_dir: str) -> str:
         if (
             name == "v1"
             or name.startswith(".")
-            or name == _CURRENT_FILE
+            or name == MANIFEST_CURRENT_FILE
             or name == _MIGRATING_MARKER
         ):
             continue
         fs.rename(os.path.join(store_dir, name), os.path.join(v1, name))
-    fs.publish_text(os.path.join(store_dir, _CURRENT_FILE), "v1")
+    fs.publish_text(os.path.join(store_dir, MANIFEST_CURRENT_FILE), "v1")
     fs.remove(marker)
     return v1
 
@@ -414,7 +407,7 @@ def build_band_index(
     byte sizes (index_bytes, wide_narrow_bytes, banded_rows) that the
     use-index gate compares at epoch time (r10 verdict task 6) —
     footprint and crossover are store facts, not constants."""
-    store_dir = _resolve_store(store_dir)
+    store_dir = resolve_manifest_dir(store_dir)
     fs = store_fs_for(store_dir)
     params_path = os.path.join(store_dir, _PARAMS_FILE)
     if not fs.exists(params_path):
@@ -1465,7 +1458,7 @@ def stamp_store_params(store_dir: str, params: dict) -> None:
     stamp (atomic publish; manifest-layout roots resolve to their
     live version dir first)."""
     fs = store_fs_for(store_dir)
-    store_dir = _resolve_store(store_dir)
+    store_dir = resolve_manifest_dir(store_dir)
     fs.makedirs(store_dir)
     fs.publish_text(
         os.path.join(store_dir, _PARAMS_FILE),
@@ -1611,7 +1604,7 @@ def _open_store(store_dir: str) -> str:
     layout resolution. Returns the live data dir all further work
     (params stamp, reads, appends, sidecar) runs against."""
     fs = store_fs_for(store_dir)
-    if not fs.supports_atomic_dir_rename and _manifest_version(
+    if not fs.supports_atomic_dir_rename and manifest_version(
         store_dir
     ) is None:
         if fs.isdir(store_dir) and _store_has_data(store_dir):
@@ -1624,7 +1617,7 @@ def _open_store(store_dir: str) -> str:
             )
         return create_manifest_store(store_dir)
     _recover_store(store_dir)
-    return _resolve_store(store_dir)
+    return resolve_manifest_dir(store_dir)
 
 
 def compact_store(
@@ -1653,38 +1646,26 @@ def compact_store(
     Contract (narrower than layout.compact, which is read-concurrent):
     ingest must be PAUSED during compaction — there is exactly one
     writer by design (the sequential foreachBatch loop), so pausing is
-    the natural maintenance window. Two swap protocols by layout:
-
-    - CLASSIC stores: the crash-safe two-RENAME directory swap (POSIX
-      rename on bare paths, the pyarrow adapter's atomic namenode
-      rename on ``hdfs://``; refused on filesystems without atomic
-      directory rename). A crash between the two renames leaves the
-      ``.old`` backup; ``_recover_store`` restores it.
-    - MANIFEST stores (r10 verdict task 4): the next version dir is
-      written completely (files + params + sidecar), then ONE atomic
-      manifest publish flips readers over and the old version is
-      deleted after. No recovery rename exists or is needed — crash
-      debris is a stale version dir, cleaned here next time — which
-      is what makes this layout legal on object stores.
+    the natural maintenance window. The store's next state (files +
+    params + sidecar) is written completely, then made live by the
+    shared storefs.swap_table_dir: the crash-safe two-RENAME directory
+    swap for a CLASSIC store (refused without atomic directory rename;
+    ``_recover_store`` restores the ``.old`` backup after a mid-swap
+    crash), ONE atomic manifest publish for a MANIFEST store (crash
+    debris is a stale version dir, cleaned next time — what makes the
+    layout legal on object stores).
 
     Returns the ACTUAL compacted file count."""
     from file_appender_spark.operators.layout import dir_bytes, plan_file_count
 
-    from file_appender_spark.storefs import assert_no_inflight_write
-
     fs = store_fs_for(store_dir)
-    manifest_cur = _manifest_version(store_dir)
+    manifest_cur = manifest_version(store_dir)
     if manifest_cur is None:
         require_atomic_dir_rename(fs, store_dir, "classic-layout compact_store")
         _recover_store(store_dir)
         data_dir = store_dir
-        tmp = store_dir.rstrip("/") + ".compacting"
-        if fs.exists(tmp):
-            fs.rmtree(tmp)  # leftover from an interrupted compaction
     else:
-        _clean_stale_versions(store_dir, keep=manifest_cur)
         data_dir = os.path.join(store_dir, manifest_cur)
-        tmp = os.path.join(store_dir, f"v{int(manifest_cur[1:]) + 1}")
     # single-writer window invariant (r9 verdict task 7): an in-flight
     # ingest append leaves _temporary under the store while it runs
     assert_no_inflight_write(fs, data_dir)
@@ -1709,36 +1690,27 @@ def compact_store(
         dir_bytes(spark, idx_dir) if fs.exists(idx_dir) else 0
     )
     n = plan_file_count(int(wide_bytes * frac), target_file_mb)
-    df.dropDuplicates([id_col]).repartition(n).write.mode("overwrite").parquet(tmp)
-    # the LSH-params stamp must survive the swap, or the next ingest
-    # batch would re-stamp with whatever params it happens to pass
-    if fs.exists(params_src):
-        fs.copy_file(params_src, os.path.join(tmp, _PARAMS_FILE))
-    if spec is not None and index_buckets is not None:
-        # built inside the next/tmp dir BEFORE the swap: file names
-        # survive both swap protocols, so the meta's covers list stays
-        # exact
-        build_band_index(spark, tmp, id_col, n_buckets=index_buckets)
-    if manifest_cur is None:
-        old = store_dir.rstrip("/") + ".old"
-        if fs.exists(old):
-            fs.rmtree(old)
-        fs.rename(store_dir, old)
-        fs.rename(tmp, store_dir)
-        fs.rmtree(old)
-        live = store_dir
-    else:
-        # THE swap: one atomic publish; the old version dir stays fully
-        # readable until this lands, then becomes deletable debris
-        fs.publish_text(
-            os.path.join(store_dir, _CURRENT_FILE), os.path.basename(tmp)
-        )
-        fs.rmtree(data_dir)
-        live = tmp
-    return sum(
-        1 for f in fs.listdir(live)
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
-    )
+    n_out = 0
+
+    def write(tmp: str) -> None:
+        # the store's full next state, complete BEFORE the swap makes
+        # it live: the deduped files, the LSH-params stamp (it must
+        # survive the swap, or the next ingest batch would re-stamp
+        # with whatever params it happens to pass) and the index
+        # sidecar (file names survive both swap protocols, so the
+        # meta's covers list stays exact)
+        nonlocal n_out
+        df.dropDuplicates([id_col]).repartition(n).write.mode(
+            "overwrite"
+        ).parquet(tmp)
+        n_out = len(_wide_files(tmp))
+        if spec is not None:
+            fs.copy_file(params_src, os.path.join(tmp, _PARAMS_FILE))
+            if index_buckets is not None:
+                build_band_index(spark, tmp, id_col, n_buckets=index_buckets)
+
+    swap_table_dir(store_dir, write)
+    return n_out
 
 
 # --------------------------------------------------------------------------

@@ -65,12 +65,12 @@ equi-join on the signature columns (columnar scan of the sigs table;
 the heavy ``sh32`` column is fetched through the candidate join) and
 the hot-bucket guard (``ingest_band_bucket_cap_for``) bounds
 template-family buckets. All store maintenance — compaction swaps,
-epoch listing, sidecar stamps — goes through the StoreFS seam
-(file_appender_spark/storefs.py), so the store can live on HDFS
-(``hdfs://`` store_dir) as well as local disk, matching the append
-sink's AppendFS discipline — and, in the MANIFEST layout, on object
-stores (``s3://``/``gs://``), whose missing atomic rename the
-per-table manifest flip does not need.
+epoch listing, sidecar stamps — is the shared EpochStore lifecycle
+on the engine's one filesystem seam (file_appender_spark/storefs.py,
+the same StoreFS the append sink writes through), so the store can
+live on HDFS (``hdfs://`` store_dir) as well as local disk — and, in
+the MANIFEST layout, on object stores (``s3://``/``gs://``), whose
+missing atomic rename the per-table manifest flip does not need.
 """
 
 from __future__ import annotations
@@ -92,25 +92,25 @@ from file_appender_spark.operators.neardup_ingest import (
     _with_index_cols,
 )
 from file_appender_spark.storefs import (
-    create_manifest_tables,
-    manifest_version,
-    migrate_tables_to_manifest,
-    refuse_mid_migration,
-    require_atomic_dir_rename,
-    resolve_manifest_dir,
+    EpochStore,
+    assert_no_inflight_write,
     store_fs_for,
     swap_table_dir,
 )
 
-_PARAMS_FILE = "_PAIRSTORE_PARAMS.json"
-_CLUSTERS_STATE = "_CLUSTERS_STATE.json"
-_MIGRATING_MARKER = "_MIGRATING_TO_MANIFEST"
 # the three tables a maintenance pass may swap; each carries its OWN
 # manifest (dir/table/_CURRENT -> vN) in the manifest layout, because
 # they flip at different cadences (clusters on every refresh, sigs/
-# pairs only at compaction) — per-table flips match the crash-safety
-# granularity the classic per-table two-rename swap already had
-_TABLES = ("sigs", "pairs", "clusters")
+# pairs only at compaction)
+_STORE = EpochStore(
+    tables=("sigs", "pairs", "clusters"),
+    params_file="_PAIRSTORE_PARAMS.json",
+    migrating_marker="_MIGRATING_TO_MANIFEST",
+    kind="pair",
+    migrate_hint="migrate_pairstore_to_manifest",
+    debris_suffixes=(".old", ".compacting", ".refreshing"),
+)
+_CLUSTERS_STATE = "_CLUSTERS_STATE.json"
 
 # the store's one band count, used at EVERY _bands_long/_resolve call
 # site (r9 ADVICE: a hard-coded 4 drifting from _params would make the
@@ -145,23 +145,8 @@ def _params(threshold: float) -> dict:
     }
 
 
-def _table_base(store_dir: str, name: str) -> str:
-    """The table's UNRESOLVED dir — where its manifest (if any) and
-    version dirs live. Maintenance swap paths need this; everything
-    else reads through the resolved live dir."""
-    return os.path.join(store_dir, name)
-
-
-def _resolve_table(store_dir: str, name: str) -> str:
-    """The table's LIVE data dir: the manifest's current version dir,
-    or the base itself for classic layout. Safe to resolve per call —
-    maintenance windows are single-writer by contract, so a flip
-    cannot race the operation that resolved."""
-    return resolve_manifest_dir(_table_base(store_dir, name))
-
-
 def _sigs_dir(store_dir: str) -> str:
-    return _resolve_table(store_dir, "sigs")
+    return _STORE.live_dir(store_dir, "sigs")
 
 
 def _sigs_row_count(store_dir: str) -> int:
@@ -186,52 +171,25 @@ def _sigs_row_count(store_dir: str) -> int:
 
 
 def _pairs_dir(store_dir: str) -> str:
-    return _resolve_table(store_dir, "pairs")
+    return _STORE.live_dir(store_dir, "pairs")
 
 
 def _clusters_dir(store_dir: str) -> str:
-    return _resolve_table(store_dir, "clusters")
+    return _STORE.live_dir(store_dir, "clusters")
 
 
 def create_manifest_pairstore(store_dir: str) -> str:
     """Initialize an EMPTY manifest-layout pair store (the layout
-    choice is creation-time, like the signature stores'): each table
-    gets v1 + a ``_CURRENT`` manifest. Idempotent and crash-resumable;
-    refuses classic data or classic ``.old`` crash debris (see
-    storefs.create_manifest_tables). build_pair_graph calls this
-    automatically when the target filesystem lacks atomic directory
-    rename (an object store could otherwise only ever hold a classic
-    store that its own maintenance would refuse)."""
-    return create_manifest_tables(
-        store_dir, _TABLES, "pair", "migrate_pairstore_to_manifest"
-    )
+    choice is creation-time; EpochStore.create_manifest has the
+    contract). build_pair_graph does this automatically on a
+    filesystem without atomic directory rename."""
+    return _STORE.create_manifest(store_dir)
 
 
 def migrate_pairstore_to_manifest(store_dir: str) -> str:
-    """Convert a CLASSIC pair store in place (single-writer
-    maintenance window, POSIX/HDFS only — where classic stores can
-    exist at all): move each table's epoch partitions into its ``v1``
-    and publish the table manifests. RESUMABLE via the store-level
-    marker; also sweeps classic debris siblings the manifest
-    maintenance would never clean (storefs.migrate_tables_to_manifest
-    has the full contract)."""
-    return migrate_tables_to_manifest(
-        store_dir,
-        _TABLES,
-        _MIGRATING_MARKER,
-        "migrate_pairstore_to_manifest",
-        classic_debris_suffixes=(".old", ".compacting", ".refreshing"),
-    )
-
-
-def _ensure_store_layout(store_dir: str) -> None:
-    """Creation-time layout choice: on a filesystem without atomic
-    directory rename the classic swap can never run, so a NEW store
-    must be manifest-layout (create_manifest_pairstore refuses loudly
-    if classic tables already exist there). POSIX/HDFS stores default
-    to classic; manifest is the explicit opt-in."""
-    if not store_fs_for(store_dir).supports_atomic_dir_rename:
-        create_manifest_pairstore(store_dir)
+    """Convert a CLASSIC pair store in place, resumably
+    (EpochStore.migrate_to_manifest has the contract)."""
+    return _STORE.migrate_to_manifest(store_dir)
 
 
 def pair_signatures(
@@ -352,33 +310,17 @@ def _old_side(sigs: DataFrame, id_col: str, dedup: bool = True) -> DataFrame:
     return out.dropDuplicates(["old_id"]) if dedup else out
 
 
-def _stamp_params(store_dir: str, threshold: float) -> None:
-    """Unconditional (re)stamp — the BUILD path's prerogative: a full
-    rebuild replaces every table, so stale params are simply replaced
-    (the corpusstats r7-advice lesson, applied from day one here)."""
-    fs = store_fs_for(store_dir)
-    fs.makedirs(store_dir)
-    # publish_text, not write+replace_file: atomic on POSIX/HDFS via
-    # the same tmp+rename, one atomic PUT on object stores (where
-    # replace_file would raise)
-    fs.publish_text(
-        os.path.join(store_dir, _PARAMS_FILE),
-        json.dumps(_params(threshold), sort_keys=True),
-    )
-
-
 def _check_params(store_dir: str, threshold: float | None) -> float:
-    """Strict guard for ingest/read: pairs verified under a different
-    threshold or hash params are a DIFFERENT graph. Returns the
-    store's threshold so read/ingest paths can default to it."""
-    fs = store_fs_for(store_dir)
-    path = os.path.join(store_dir, _PARAMS_FILE)
-    if not fs.exists(path):
+    """Strict guard for ingest/read: the stamp is REQUIRED (only the
+    build writes it), and pairs verified under a different threshold
+    or hash params are a DIFFERENT graph. Returns the store's
+    threshold so read/ingest paths can default to it."""
+    stored = _STORE.read_params(store_dir)
+    if stored is None:
         raise ValueError(
-            f"{store_dir} is not a pair store (no {_PARAMS_FILE}); "
+            f"{store_dir} is not a pair store (no {_STORE.params_file}); "
             "run build_pair_graph first"
         )
-    stored = json.loads(fs.read_text(path))
     if threshold is not None and stored != _params(threshold):
         raise ValueError(
             f"pair store {store_dir} was built with {stored}, this call "
@@ -386,44 +328,6 @@ def _check_params(store_dir: str, threshold: float | None) -> float:
             "rebuild or pass the original threshold"
         )
     return float(stored["threshold"])
-
-
-def _recover(store_dir: str) -> None:
-    """Crash recovery at the head of every entry point — the
-    single-fault discipline shared by every incremental store, now
-    layout-aware (r11, lifting the r10 deferral): MANIFEST-layout
-    tables need no recovery at all (crash debris is a stale version
-    dir, cleaned lazily by the next swap of that table), so a fully
-    manifest store runs on filesystems without atomic directory
-    rename. CLASSIC tables keep the .old restore, whose crash-safety
-    still requires the rename — enforced loudly here, per table,
-    only when classic data actually exists."""
-    fs = store_fs_for(store_dir)
-    refuse_mid_migration(
-        store_dir,
-        _MIGRATING_MARKER,
-        "pair",
-        "migrate_pairstore_to_manifest",
-        manifest_dirs=[_table_base(store_dir, n) for n in _TABLES],
-    )
-    for name in _TABLES:
-        base = _table_base(store_dir, name)
-        if manifest_version(base) is not None:
-            continue
-        old = base.rstrip("/") + ".old"
-        if fs.exists(base) or fs.exists(old):
-            require_atomic_dir_rename(
-                fs, store_dir, "classic-layout pair-store maintenance"
-            )
-        if not fs.exists(base) and fs.exists(old):
-            fs.rename(old, base)
-
-
-def _write_epoch(df: DataFrame, base: str, batch_id: str) -> None:
-    # one partition dir per epoch, overwritten on retry — idempotent.
-    # (an empty epoch still writes one footer-bearing part file —
-    # Spark 4's FileFormatWriter — so read-back keeps its schema)
-    df.write.mode("overwrite").parquet(os.path.join(base, f"batch={batch_id}"))
 
 
 def build_pair_graph(
@@ -453,19 +357,14 @@ def build_pair_graph(
     if threshold is None:
         threshold = _q52_threshold()
 
-    _recover(store_dir)
-    _ensure_store_layout(store_dir)  # manifest is mandatory sans atomic rename
+    _STORE.recover(store_dir)
+    _STORE.ensure_layout(store_dir)  # manifest is mandatory sans atomic rename
     # wipe FIRST, stamp params only after the new tables exist: a
     # crash mid-rebuild must leave a store that fails LOUDLY (missing
     # tables / missing stamp), never old-threshold pairs readable
     # under a new-threshold stamp (review finding r8)
+    _STORE.wipe(store_dir)
     fs = store_fs_for(store_dir)
-    params_path = os.path.join(store_dir, _PARAMS_FILE)
-    if fs.exists(params_path):
-        fs.remove(params_path)
-    for d in (_sigs_dir(store_dir), _pairs_dir(store_dir), _clusters_dir(store_dir)):
-        if fs.exists(d):
-            fs.rmtree(d)
     state = os.path.join(store_dir, _CLUSTERS_STATE)
     if fs.exists(state):
         fs.remove(state)
@@ -497,10 +396,12 @@ def build_pair_graph(
         _mark_if_cap_bound(
             store_dir, None, bands.withColumnRenamed("sig", "bh"), cap
         )
-    _write_epoch(sigs, _sigs_dir(store_dir), "base")
-    _write_epoch(pairs, _pairs_dir(store_dir), "base")
+    _STORE.write_epoch(sigs, store_dir, "sigs", "base")
+    _STORE.write_epoch(pairs, store_dir, "pairs", "base")
     sigs.unpersist()
-    _stamp_params(store_dir, threshold)  # only once the data it describes exists
+    # only once the data it describes exists; a rebuild replaces every
+    # table, so stale params are simply replaced
+    _STORE.stamp_params(store_dir, _params(threshold))
     refresh_clusters(spark, store_dir)
 
 
@@ -537,7 +438,7 @@ def pairstore_ingest_batch(
             "batch_id 'base' is reserved for build_pair_graph — an ingest "
             "epoch writing there would clobber the corpus baseline"
         )
-    _recover(store_dir)
+    _STORE.recover(store_dir)
     threshold = _check_params(store_dir, None)
     sigs = _with_sig_hashes(
         pair_signatures(batch, id_col, text_col)
@@ -602,13 +503,13 @@ def pairstore_ingest_batch(
     # exact (2nd review pass, r9)
     if cap is not None:
         _mark_if_cap_bound(store_dir, hist_slice, batch_bands, cap)
-    _write_epoch(pairs, _pairs_dir(store_dir), str(batch_id))
+    _STORE.write_epoch(pairs, store_dir, "pairs", str(batch_id))
     if not _store_is_v2(hist):
         # epochs always match the store's existing sig schema so the
         # merged partitioned read is never mixed-version; compaction
         # upgrades the whole table atomically
         sigs = sigs.drop("fh", *[f"bh{bi}" for bi in range(_N_BANDS)])
-    _write_epoch(sigs, _sigs_dir(store_dir), str(batch_id))
+    _STORE.write_epoch(sigs, store_dir, "sigs", str(batch_id))
 
 
 _CAPPED_MARKER = "_CAPPED_EPOCHS"
@@ -702,7 +603,7 @@ def read_pairs(
     assumption LOUD: a store built at a different threshold is a
     different graph, and oracle-parity consumers (q116/q183/q213
     pass q52's 0.2) must refuse it rather than silently serve it."""
-    _recover(store_dir)
+    _STORE.recover(store_dir)
     _check_params(store_dir, expected_threshold)
     pairs = (
         spark.read.option("basePath", _pairs_dir(store_dir))
@@ -729,7 +630,7 @@ def store_missing_ids(
     get a signature row by q52's definition, so their absence is not
     a coverage gap). One columnar id scan of the sigs table + an
     anti-join; no payload columns touched."""
-    _recover(store_dir)
+    _STORE.recover(store_dir)
     _check_params(store_dir, None)
     sigs_ids = (
         spark.read.option("basePath", _sigs_dir(store_dir))
@@ -866,14 +767,12 @@ def refresh_clusters(
     external cleanup — coverage could otherwise claim epochs that no
     longer exist). ``mode="full"`` forces the recompute — it is also
     the incremental path's equivalence oracle. Crash-safe swap +
-    _recover, the shared store discipline."""
+    crash recovery, the shared store discipline."""
     from file_appender_spark.operators.components import dedup_clusters
 
     if mode not in ("auto", "full", "incremental"):
         raise ValueError(f"mode must be auto/full/incremental, got {mode!r}")
-    from file_appender_spark.storefs import assert_no_inflight_write
-
-    _recover(store_dir)
+    _STORE.recover(store_dir)
     _check_params(store_dir, None)
     fs = store_fs_for(store_dir)
     # refuse to stamp coverage while an epoch write is in flight: the
@@ -906,7 +805,7 @@ def refresh_clusters(
     # repartition(>=1) guarantees at least one footer-bearing file so
     # an empty graph still reads back with a schema
     swap_table_dir(
-        _table_base(store_dir, "clusters"),
+        _STORE.table_base(store_dir, "clusters"),
         lambda tmp: cl.repartition(
             max(1, spark.sparkContext.defaultParallelism // 8)
         )
@@ -935,7 +834,7 @@ def read_cluster_assignment(
     merged-away clusters — unless ``allow_stale=True``; the fix is
     one refresh_clusters call. ``expected_threshold`` as in
     read_pairs (q116 passes q52's 0.2)."""
-    _recover(store_dir)
+    _STORE.recover(store_dir)
     _check_params(store_dir, expected_threshold)
     fs = store_fs_for(store_dir)
     state = os.path.join(store_dir, _CLUSTERS_STATE)
@@ -970,9 +869,7 @@ def compact_pairstore(spark: SparkSession, store_dir: str) -> None:
     guard exists to catch (review finding r8)."""
     from file_appender_spark.operators.layout import dir_bytes, plan_file_count
 
-    from file_appender_spark.storefs import assert_no_inflight_write
-
-    _recover(store_dir)
+    _STORE.recover(store_dir)
     _check_params(store_dir, None)
     fs = store_fs_for(store_dir)
     # single-writer window invariant (r9 verdict task 7): refuse to
@@ -996,7 +893,7 @@ def compact_pairstore(spark: SparkSession, store_dir: str) -> None:
             ),
         )
     for name in ("sigs", "pairs"):
-        d = _resolve_table(store_dir, name)
+        d = _STORE.live_dir(store_dir, name)
         merged = spark.read.option("basePath", d).parquet(d).drop("batch")
         if name == "sigs" and not _store_is_v2(merged):
             # compaction is the v1 -> v2 migration point: fold in the
@@ -1009,11 +906,7 @@ def compact_pairstore(spark: SparkSession, store_dir: str) -> None:
             # fly until compaction. Sigs never duplicate: each doc's
             # signature lives in exactly its own overwritten epoch.
             merged = merged.distinct()
-        n = plan_file_count(dir_bytes(spark, d))
-        swap_table_dir(
-            _table_base(store_dir, name),
-            lambda tmp, m=merged, k=n: m.repartition(k)
-            .write.mode("overwrite")
-            .parquet(os.path.join(tmp, "batch=base")),
+        _STORE.compact_swap(
+            store_dir, name, merged, plan_file_count(dir_bytes(spark, d))
         )
 

@@ -223,11 +223,11 @@ def q270_textdup_manifest_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     admit decision: same oracle as q260/q264, hash-equal or the
     driver fails the row."""
     from file_appender_spark.operators.neardup_ingest import (
-        _manifest_version,
         compact_store,
         migrate_store_to_manifest,
         textdup_ingest_batch,
     )
+    from file_appender_spark.storefs import manifest_version
 
     store = _scratch("q270_manifest")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -243,15 +243,15 @@ def q270_textdup_manifest_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", (F.col("doc_id") % 2).cast("int").alias("epoch")
     ).write.mode("overwrite").parquet(out_path)
     migrate_store_to_manifest(store)
-    if _manifest_version(store) != "v1":
+    if manifest_version(store) != "v1":
         raise AssertionError(
-            f"migration must publish v1, got {_manifest_version(store)!r}"
+            f"migration must publish v1, got {manifest_version(store)!r}"
         )
     compact_store(spark, store, id_col="doc_id")
-    if _manifest_version(store) != "v2":
+    if manifest_version(store) != "v2":
         raise AssertionError(
             f"manifest compaction must flip to v2, got "
-            f"{_manifest_version(store)!r}"
+            f"{manifest_version(store)!r}"
         )
     a1 = textdup_ingest_batch(
         spark,

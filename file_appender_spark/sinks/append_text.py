@@ -25,14 +25,17 @@ Sane-behavior deviations (each documented in SURVEY.md §2.1):
   per-record check (the reference busy-loops there);
 - age threshold carries MINUTES (the reference constant is misnamed).
 
-Filesystem access is abstracted behind the :class:`AppendFS`
-protocol with two implementations: :class:`LocalFS` (POSIX append —
+Filesystem access goes through the engine's one seam,
+:class:`~file_appender_spark.storefs.StoreFS` (storefs.py) — the same
+adapters the incremental stores use: ``LocalStoreFS`` (POSIX append —
 the A15 local-mode shim the reference itself uses in tests,
 RawLocalFileSystem, AppendOutputFormat.java:66-72) and
-:class:`ArrowFS` (pyarrow.fs — HadoopFileSystem for ``hdfs://``
+``ArrowStoreFS`` (pyarrow.fs — HadoopFileSystem for ``hdfs://``
 output dirs, the filesystem the reference's protocol actually
-targets; selected automatically by ``fs_for_path``). The A8-A13
-protocol suite runs against BOTH in tests/test_append_fs.py.
+targets). ``fs_for_path`` selects one from the output dir; the sink
+uses only ``list_files``, ``makedirs``, ``exists``, ``open_append``
+and ``create_new``. The A8-A13 protocol suite runs against BOTH
+adapters in tests/test_append_fs.py.
 """
 
 from __future__ import annotations
@@ -41,12 +44,12 @@ import os
 import re
 import time
 from dataclasses import dataclass
-from typing import Protocol
 
 from pyspark.sql import DataFrame
 
 from file_appender_spark.config import AppendSinkConfig
 from file_appender_spark.serialize import serialized
+from file_appender_spark.storefs import StoreFS, store_fs_for
 
 
 @dataclass(frozen=True)
@@ -75,210 +78,16 @@ class FileInfo:
         return FileInfo(name, int(tail), size)
 
 
-class AppendFS(Protocol):
-    """The sink's filesystem seam — everything the A1-A15 protocol
-    needs from a filesystem, and nothing more. Implementations must
-    be PICKLABLE WITHOUT HANDLES (each executor worker re-creates its
-    connections lazily) and support true append (HDFS, POSIX; object
-    stores need not apply — the reference's protocol is append-
-    centric by design, AppendOutputFormat.java:212)."""
-
-    def list_files(self, directory: str) -> list[tuple[str, int]]: ...
-
-    def makedirs(self, directory: str) -> None: ...
-
-    def open_append(self, path: str): ...
-
-    def create_new(self, path: str): ...
-
-    def exists(self, path: str) -> bool: ...
-
-
-class LocalFS:
-    """POSIX filesystem shim (reference A15). Executor-side workers
-    re-instantiate this from its path-free state — it carries no
-    handles."""
-
-    def list_files(self, directory: str) -> list[tuple[str, int]]:
-        if not os.path.isdir(directory):
-            return []
-        out = []
-        for n in os.listdir(directory):
-            p = os.path.join(directory, n)
-            if os.path.isfile(p):
-                out.append((n, os.path.getsize(p)))
-        return out
-
-    def makedirs(self, directory: str) -> None:
-        os.makedirs(directory, exist_ok=True)
-
-    def open_append(self, path: str):
-        return open(path, "ab")
-
-    def create_new(self, path: str):
-        # O_EXCL create — fails if the file exists, which drives the
-        # reference's rotation retry loop (AppendOutputFormat.java:227-241)
-        return open(path, "xb")
-
-    def exists(self, path: str) -> bool:
-        return os.path.exists(path)
-
-
-def resolve_against_spec(fs_spec: str, path: str) -> str:
-    """Strip the scheme AFTER checking the path actually belongs to
-    the filesystem ``fs_spec`` names: a bare ``_strip_scheme`` would
-    silently drop the authority, so an ``hdfs://nn-a`` adapter handed
-    an ``hdfs://nn-b/...`` path would operate on the wrong cluster
-    (r8 verdict nit). Shared by the sink's ArrowFS and the stores'
-    ArrowStoreFS (file_appender_spark/storefs.py) so the two
-    adapters' refusal behavior can never drift."""
-    if "://" in path:
-        scheme, rest = path.split("://", 1)
-        path_auth = rest.split("/", 1)[0]
-        if fs_spec == "local":
-            if scheme != "file" or path_auth:
-                raise ValueError(
-                    f"path {path!r} is not on the local filesystem this "
-                    "adapter is bound to"
-                )
-        else:
-            spec_scheme, spec_rest = fs_spec.split("://", 1)
-            spec_auth = spec_rest.split("/", 1)[0]
-            if scheme != spec_scheme or (path_auth and path_auth != spec_auth):
-                raise ValueError(
-                    f"path {path!r} names filesystem "
-                    f"{scheme}://{path_auth}, but this adapter is bound to "
-                    f"{fs_spec!r} — refusing to operate on a different "
-                    "cluster"
-                )
-    return _strip_scheme(path)
-
-
-def _strip_scheme(path: str) -> str:
-    """'hdfs://nn:8020/a/b' -> '/a/b' (pyarrow filesystems take
-    scheme-free paths); bare paths pass through unchanged."""
-    if "://" not in path:
-        return path
-    rest = path.split("://", 1)[1]
-    idx = rest.find("/")
-    return rest[idx:] if idx >= 0 else "/"
-
-
-class ArrowFS:
-    """pyarrow.fs-backed implementation of the AppendFS protocol —
-    the HDFS adapter the reference's protocol actually targets
-    (AppendOutputFormat.java:66-72 elects files via listStatus,
-    :212 appends with fs.append; the A15 LocalFS shim mirrors its
-    RawLocalFileSystem test mode). One class covers any pyarrow
-    FileSystem that supports open_append_stream: HadoopFileSystem
-    for ``hdfs://`` URIs in production, LocalFileSystem for the
-    parity test matrix (tests/test_append_fs.py runs the full
-    A8-A13 protocol suite against it, so the adapter code path —
-    not just LocalFS — is what's verified).
-
-    Picklable without handles: only the URI spec ships to executors;
-    the underlying FileSystem (and its Hadoop client connection) is
-    re-created lazily per worker process.
-
-    ``create_new`` semantics: pyarrow exposes no O_EXCL create. On
-    the ``local`` spec the adapter therefore uses a real ``open(x)``
-    exclusive create (no window at all). On HDFS, exclusive creation
-    is exists-check + create; the residual TOCTOU window is benign
-    under the sink's task model — every writer's rotation names
-    carry its own partition id (name_prefix), so no two live writers
-    ever race the same path — and the sink additionally RELIES ON
-    HDFS SINGLE-WRITER LEASES (the reference's own protection,
-    AppendOutputFormat.java:227-241 runs atomic createNewFile on the
-    same filesystem): a zombie attempt still holding the file's
-    lease makes the retry's open fail loudly rather than truncate.
-    The retry-on-exists loop is preserved for the observed-exists
-    case exactly like the reference's."""
-
-    def __init__(self, fs_spec: str = "local"):
-        self.fs_spec = fs_spec
-        self._fs = None
-
-    # -- pickling: spec only, never the connection handle
-    def __getstate__(self):
-        return {"fs_spec": self.fs_spec}
-
-    def __setstate__(self, state):
-        self.fs_spec = state["fs_spec"]
-        self._fs = None
-
-    def _filesystem(self):
-        if self._fs is None:
-            from pyarrow import fs as pafs
-
-            if self.fs_spec == "local":
-                self._fs = pafs.LocalFileSystem()
-            elif self.fs_spec.startswith("hdfs://"):
-                # connection params (namenode, port, user, kerberos)
-                # come from the URI + the ambient Hadoop client config
-                # (HADOOP_HOME / CLASSPATH), the standard pyarrow way
-                self._fs, _ = pafs.FileSystem.from_uri(self.fs_spec)
-            else:
-                raise ValueError(
-                    f"unsupported ArrowFS spec {self.fs_spec!r}: use 'local' "
-                    "or an hdfs:// URI"
-                )
-        return self._fs
-
-    def _resolve(self, path: str) -> str:
-        return resolve_against_spec(self.fs_spec, path)
-
-    def list_files(self, directory: str) -> list[tuple[str, int]]:
-        from pyarrow import fs as pafs
-
-        sel = pafs.FileSelector(
-            self._resolve(directory), allow_not_found=True, recursive=False
-        )
-        out = []
-        for info in self._filesystem().get_file_info(sel):
-            if info.type == pafs.FileType.File:
-                out.append((info.base_name, int(info.size)))
-        return out
-
-    def makedirs(self, directory: str) -> None:
-        self._filesystem().create_dir(self._resolve(directory), recursive=True)
-
-    def open_append(self, path: str):
-        return self._filesystem().open_append_stream(self._resolve(path))
-
-    def create_new(self, path: str):
-        local = self._resolve(path)
-        if self.fs_spec == "local":
-            # true O_EXCL create — pyarrow's LocalFileSystem has
-            # neither exclusive create nor lease protection, so the
-            # exists-check window would let a zombie attempt's
-            # rotated file be silently truncated (r8 ADVICE); the
-            # kernel closes that window for free here
-            return open(local, "xb")
-        # HDFS: exists-check + create; residual window covered by the
-        # namenode's single-writer lease — see class docstring
-        if self.exists(path):
-            raise FileExistsError(path)
-        return self._filesystem().open_output_stream(local)
-
-    def exists(self, path: str) -> bool:
-        from pyarrow import fs as pafs
-
-        info = self._filesystem().get_file_info(self._resolve(path))
-        return info.type != pafs.FileType.NotFound
-
-
-def fs_for_path(path: str) -> "AppendFS":
+def fs_for_path(path: str) -> StoreFS:
     """Scheme-based filesystem selection for the sink: ``hdfs://``
-    URIs get the pyarrow Hadoop adapter, bare paths the POSIX shim —
-    so `append_text` against an HDFS output_dir needs no explicit fs
-    argument. Any other scheme is refused loudly (the storefs
-    discipline, r9 verdict task 3): the sink's whole protocol is
-    per-file APPEND, which object stores do not support — an
-    ``s3://`` output_dir would silently hit the POSIX shim and fail
-    with a confusing ENOENT instead of naming the real constraint."""
-    if path.startswith("hdfs://"):
-        return ArrowFS(path)
-    if "://" in path:
+    URIs get the pyarrow Hadoop adapter, bare paths the POSIX shim
+    (``store_fs_for``) — so `append_text` against an HDFS output_dir
+    needs no explicit fs argument. Any other scheme is refused loudly
+    (the storefs discipline, r9 verdict task 3): the sink's whole
+    protocol is per-file APPEND, which object stores do not support —
+    an ``s3://`` output_dir would otherwise fail deep inside a task
+    instead of naming the real constraint."""
+    if "://" in path and not path.startswith("hdfs://"):
         scheme = path.split("://", 1)[0]
         raise ValueError(
             f"unsupported sink filesystem scheme {scheme!r} for {path!r}: "
@@ -286,7 +95,7 @@ def fs_for_path(path: str) -> "AppendFS":
             "which object stores such as s3:// do not provide. Use a "
             "bare local path or hdfs://"
         )
-    return LocalFS()
+    return store_fs_for(path)
 
 
 def elect_incomplete_files(
@@ -328,7 +137,7 @@ class _PartitionWriter:
         partition_id: int,
         config: AppendSinkConfig,
         run_ts_ms: int,
-        fs: AppendFS,
+        fs: StoreFS,
     ):
         self.directory = directory
         self.assigned = assigned
@@ -407,7 +216,7 @@ def append_text(
     df: DataFrame,
     config: AppendSinkConfig,
     run_ts_ms: int | None = None,
-    fs: AppendFS | None = None,
+    fs: StoreFS | None = None,
 ) -> None:
     """Write ``df`` as delimited text lines, appending into existing
     under-threshold files (the reference's full A1-A15 protocol).
@@ -421,9 +230,19 @@ def append_text(
     through one file handle — the job stays map-only exactly like the
     reference's. Correctness requires at most one task per elected
     file index, which Spark's task-per-partition model guarantees
-    (speculative execution must stay off for this sink — same
-    at-least-once caveat as the reference's no-op committer).
+    — but only with speculative execution off: a speculative copy of
+    a task would append the same partition into the same elected file
+    concurrently. A session with ``spark.speculation=true`` is
+    therefore refused with a ValueError (the at-least-once contract
+    of the reference's no-op committer covers retries, not
+    concurrent attempts).
     """
+    if df.sparkSession.conf.get("spark.speculation", "false").lower() == "true":
+        raise ValueError(
+            "append_text requires spark.speculation=false: a speculative "
+            "task attempt would append the same partition into the same "
+            "elected file concurrently with the original attempt"
+        )
     fs = fs or fs_for_path(config.output_dir)
     run_ts_ms = int(time.time() * 1000) if run_ts_ms is None else run_ts_ms
 

@@ -1,8 +1,8 @@
-"""AppendFS parity matrix (r7 verdict task 4): the A8-A13 protocol
-suite parameterized over BOTH filesystem implementations — the POSIX
-LocalFS shim (A15) and the pyarrow ArrowFS adapter (the HDFS path,
-exercised here through pyarrow's LocalFileSystem so the adapter CODE
-— list/append/create-new/exists via pyarrow streams, scheme
+"""Sink parity matrix (r7 verdict task 4): the A8-A13 protocol
+suite parameterized over BOTH StoreFS implementations — the POSIX
+LocalStoreFS shim (A15) and the pyarrow ArrowStoreFS adapter (the
+HDFS path, exercised here through pyarrow's LocalFileSystem so the
+adapter CODE — list/append/create-new/exists via pyarrow streams, scheme
 stripping, handle-free pickling — is what runs; an actual
 HadoopFileSystem differs only in the FileSystem instance pyarrow
 constructs from the hdfs:// URI)."""
@@ -18,13 +18,11 @@ from pyspark.sql import types as T
 
 from file_appender_spark.config import AppendSinkConfig
 from file_appender_spark.sinks.append_text import (
-    ArrowFS,
-    LocalFS,
     _PartitionWriter,
-    _strip_scheme,
     append_text,
     fs_for_path,
 )
+from file_appender_spark.storefs import ArrowStoreFS, LocalStoreFS, _strip_scheme
 
 SCHEMA = T.StructType(
     [
@@ -38,7 +36,9 @@ ROWS = [("samuel", "wallet"), ("dwayne", "rock"), ("christopher", "cowbell")]
 
 @pytest.fixture(params=["local_posix", "arrow_local"])
 def fs_impl(request):
-    return LocalFS() if request.param == "local_posix" else ArrowFS("local")
+    if request.param == "local_posix":
+        return LocalStoreFS()
+    return ArrowStoreFS("local")
 
 
 def read_lines(directory):
@@ -156,9 +156,9 @@ def test_list_files_and_exists(tmp_path, fs_impl):
 
 
 def test_arrowfs_pickles_without_handle(tmp_path):
-    """Executor shipping: the pickled ArrowFS carries only its spec;
+    """Executor shipping: the pickled ArrowStoreFS carries only its spec;
     the FileSystem handle is rebuilt lazily in the new 'process'."""
-    fs = ArrowFS("local")
+    fs = ArrowStoreFS("local")
     fs._filesystem()  # materialize the handle driver-side
     clone = pickle.loads(pickle.dumps(fs))
     assert clone._fs is None and clone.fs_spec == "local"
@@ -168,12 +168,15 @@ def test_arrowfs_pickles_without_handle(tmp_path):
 
 
 def test_fs_for_path_scheme_selection():
-    assert isinstance(fs_for_path("/plain/dir"), LocalFS)
+    assert isinstance(fs_for_path("/plain/dir"), LocalStoreFS)
     hdfs = fs_for_path("hdfs://nn:8020/warehouse/out")
-    assert isinstance(hdfs, ArrowFS)
-    assert hdfs.fs_spec == "hdfs://nn:8020/warehouse/out"
-    with pytest.raises(ValueError, match="unsupported ArrowFS spec"):
-        ArrowFS("s3://bucket/x")._filesystem()
+    assert isinstance(hdfs, ArrowStoreFS)
+    assert hdfs.fs_spec == "hdfs://nn:8020"
+    # object stores cannot append: the sink refuses them at selection
+    with pytest.raises(ValueError, match="unsupported sink filesystem scheme"):
+        fs_for_path("s3://bucket/x")
+    with pytest.raises(ValueError, match="'gs'"):
+        fs_for_path("gs://bucket/x")
 
 
 def test_strip_scheme():
@@ -188,9 +191,7 @@ def test_arrowfs_authority_guard(tmp_path):
     authority, so an adapter bound to one namenode handed a path on
     another would operate on the wrong cluster. The adapter now
     refuses cross-authority (and cross-scheme) paths."""
-    from file_appender_spark.sinks.append_text import ArrowFS
-
-    hdfs = ArrowFS("hdfs://nn-a:8020")
+    hdfs = ArrowStoreFS("hdfs://nn-a:8020")
     # matching authority resolves; foreign authority/scheme refuse
     assert hdfs._resolve("hdfs://nn-a:8020/data/x") == "/data/x"
     assert hdfs._resolve("/data/x") == "/data/x"  # bare paths pass
@@ -199,7 +200,7 @@ def test_arrowfs_authority_guard(tmp_path):
     with pytest.raises(ValueError, match="different cluster"):
         hdfs._resolve("s3://bucket/data/x")
 
-    local = ArrowFS("local")
+    local = ArrowStoreFS("local")
     assert local._resolve(str(tmp_path / "f")) == str(tmp_path / "f")
     assert local._resolve(f"file://{tmp_path}/f") == f"{tmp_path}/f"
     with pytest.raises(ValueError, match="local filesystem"):
@@ -211,9 +212,7 @@ def test_arrowfs_local_create_new_is_o_excl(tmp_path):
     create_new must be a true O_EXCL create — the kernel refuses the
     second creator even if an exists-check raced, and an existing
     file is never truncated."""
-    from file_appender_spark.sinks.append_text import ArrowFS
-
-    fs = ArrowFS("local")
+    fs = ArrowStoreFS("local")
     p = str(tmp_path / "excl.txt")
     h = fs.create_new(p)
     h.write(b"original")

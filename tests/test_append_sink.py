@@ -168,16 +168,16 @@ def test_election_prefix_startswith(spark):
 def test_custom_fs_reaches_executors(spark, tmp_path):
     """Regression: the fs argument must be used by the partition
     writers, not only the driver-side scan."""
-    from file_appender_spark.sinks.append_text import LocalFS
+    from file_appender_spark.storefs import LocalStoreFS
 
     out = str(tmp_path / "out")
     cfg = AppendSinkConfig(output_dir=out, file_prefix="f")
     df = spark.createDataFrame(ROWS, SCHEMA).coalesce(1)
     # a subclass that writes to a shifted directory proves the
-    # instance (not a fresh LocalFS) did the writing
+    # instance (not a fresh LocalStoreFS) did the writing
     shifted = str(tmp_path / "shifted")
 
-    class ShiftFS(LocalFS):
+    class ShiftFS(LocalStoreFS):
         def create_new(self, path):
             os.makedirs(shifted, exist_ok=True)
             return open(os.path.join(shifted, os.path.basename(path)), "xb")
@@ -193,6 +193,30 @@ def test_validation_blocks_bad_config(spark, tmp_path):
     df = spark.createDataFrame(ROWS, SCHEMA)
     with pytest.raises(SchemaValidationError):
         append_text(df, cfg, run_ts_ms=1000)
+
+
+def test_speculation_is_refused(spark, tmp_path, monkeypatch):
+    """A speculative duplicate attempt would append the same partition
+    into the same elected file concurrently, so the sink refuses a
+    session with spark.speculation on — before it touches the output
+    dir. spark.speculation is a core conf that spark.conf.set rejects
+    at runtime, so the conf read is patched."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    real_get = RuntimeConfig.get
+
+    def get(self, key, *args, **kwargs):
+        if key == "spark.speculation":
+            return "true"
+        return real_get(self, key, *args, **kwargs)
+
+    monkeypatch.setattr(RuntimeConfig, "get", get)
+    out = str(tmp_path / "o")
+    cfg = AppendSinkConfig(output_dir=out, file_prefix="f")
+    df = spark.createDataFrame(ROWS, SCHEMA)
+    with pytest.raises(ValueError, match="spark.speculation=false"):
+        append_text(df, cfg, run_ts_ms=1000)
+    assert not os.path.exists(out)
 
 
 def test_projection_via_output_schema(spark, tmp_path):
@@ -227,10 +251,11 @@ def test_rotation_counter_excludes_newline(tmp_path):
     (AppendOutputFormat.java:217-219) — the newline written by writeln
     never reaches the rotation counter. Pin that here so the rotation
     point tracks the reference protocol byte-for-byte."""
-    from file_appender_spark.sinks.append_text import LocalFS, _PartitionWriter
+    from file_appender_spark.sinks.append_text import _PartitionWriter
+    from file_appender_spark.storefs import LocalStoreFS
 
     cfg = AppendSinkConfig(output_dir=str(tmp_path), file_prefix="f")
-    w = _PartitionWriter(str(tmp_path), None, 0, cfg, 1_000, LocalFS())
+    w = _PartitionWriter(str(tmp_path), None, 0, cfg, 1_000, LocalStoreFS())
     for line in ("ab", "cdef", "g"):
         w.write_line(line)
     w.close()
@@ -267,12 +292,13 @@ def test_task_retry_duplicates_lines_at_least_once(tmp_path):
     reference's append-or-create at first write
     (AppendOutputFormat.java:208-221) makes the retry APPEND after the
     failed attempt's partial output."""
-    from file_appender_spark.sinks.append_text import LocalFS, _PartitionWriter
+    from file_appender_spark.sinks.append_text import _PartitionWriter
+    from file_appender_spark.storefs import LocalStoreFS
 
     cfg = AppendSinkConfig(output_dir=str(tmp_path), file_prefix="f")
     lines = [f"row-{i}" for i in range(5)]
     run_ts = 1_000_000
-    fs = LocalFS()
+    fs = LocalStoreFS()
 
     # attempt 1: partial write, then the task dies mid-partition
     w1 = _PartitionWriter(str(tmp_path), None, 0, cfg, run_ts, fs)

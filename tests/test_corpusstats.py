@@ -382,12 +382,15 @@ def test_merged_view_memo_shares_and_invalidates(spark, tmp_path):
     r12 verdict item 5). Pins the two properties that make that safe:
     (a) an UNCHANGED table serves the same cached frame (identity),
     (b) ANY file change — a new epoch partition here — invalidates
-    the entry and the re-read sees the new counts."""
+    the entry and the re-read sees the new counts, (c)
+    reset_store_fs_cache() drops the memo: the next read is a fresh
+    frame over the same rows."""
     from file_appender_spark.operators.corpusstats import (
         build_corpus_stats,
         corpusstats_ingest_batch,
         read_token_stats,
     )
+    from file_appender_spark.storefs import reset_store_fs_cache
 
     docs1 = spark.createDataFrame(
         [(1, "a", "aa bb aa"), (2, "a", "bb cc")],
@@ -409,3 +412,10 @@ def test_merged_view_memo_shares_and_invalidates(spark, tmp_path):
     assert v2 is not v1
     merged = {(r["source"], r["token"]): (r["tf"], r["df"]) for r in v2.collect()}
     assert merged[("a", "aa")] == (3, 2)  # +1 tf, +1 df from epoch 1
+    # (c) the cache reset drops the memo: a NEW frame, the SAME rows
+    reset_store_fs_cache()
+    v3 = read_token_stats(spark, store)
+    assert v3 is not v2
+    assert {
+        (r["source"], r["token"]): (r["tf"], r["df"]) for r in v3.collect()
+    } == merged

@@ -22,17 +22,19 @@ from pyspark.sql import functions as F
 
 from file_appender_spark import storefs
 from file_appender_spark.operators.neardup_ingest import (
-    _CURRENT_FILE,
     _INDEX_DIR,
     _band_index_state,
-    _manifest_version,
-    _resolve_store,
     compact_store,
     create_manifest_store,
     migrate_store_to_manifest,
     textdup_ingest_batch,
 )
-from file_appender_spark.storefs import LocalStoreFS
+from file_appender_spark.storefs import (
+    MANIFEST_CURRENT_FILE,
+    LocalStoreFS,
+    manifest_version,
+    resolve_manifest_dir,
+)
 
 
 class NoDirRenameFS(LocalStoreFS):
@@ -91,8 +93,8 @@ def test_manifest_lifecycle_on_no_dir_rename_backend(
     docs = _corpus(spark, 30)
     a1 = textdup_ingest_batch(spark, docs.filter("doc_id < 20"), store)
     # the layout was auto-created: manifest + v1 data dir
-    assert _manifest_version(store) == "v1"
-    assert os.path.isfile(os.path.join(store, _CURRENT_FILE))
+    assert manifest_version(store) == "v1"
+    assert os.path.isfile(os.path.join(store, MANIFEST_CURRENT_FILE))
     assert any(
         f.endswith(".parquet") for f in os.listdir(os.path.join(store, "v1"))
     )
@@ -104,9 +106,9 @@ def test_manifest_lifecycle_on_no_dir_rename_backend(
     # compaction: next version dir + ONE atomic publish, old dir gone
     n_files = compact_store(spark, store, id_col="doc_id", index_buckets=64)
     assert n_files >= 1
-    assert _manifest_version(store) == "v2"
+    assert manifest_version(store) == "v2"
     assert not os.path.exists(os.path.join(store, "v1"))
-    state = _band_index_state(_resolve_store(store))
+    state = _band_index_state(resolve_manifest_dir(store))
     assert state is not None and state["version"] == 2
     # post-compaction epoch resolves the new version; a replay of
     # previously-ADMITTED ids re-emits them all (at-least-once; doc 1
@@ -127,15 +129,15 @@ def test_manifest_compaction_cleans_crash_debris(spark, tmp_path, object_fs):
     # crash-before-flip debris: a half-written v2
     os.makedirs(os.path.join(store, "v2"))
     open(os.path.join(store, "v2", "part-half.parquet"), "w").close()
-    assert _manifest_version(store) == "v1"
+    assert manifest_version(store) == "v1"
     compact_store(spark, store, id_col="doc_id", index_buckets=64)
-    assert _manifest_version(store) == "v2"
+    assert manifest_version(store) == "v2"
     assert not os.path.exists(os.path.join(store, "v1"))
     # crash-after-flip debris: recreate a stale old dir, then compact
     os.makedirs(os.path.join(store, "v1"))
     open(os.path.join(store, "v1", "part-stale.parquet"), "w").close()
     compact_store(spark, store, id_col="doc_id", index_buckets=64)
-    assert _manifest_version(store) == "v3"
+    assert manifest_version(store) == "v3"
     assert not os.path.exists(os.path.join(store, "v1"))
     assert not os.path.exists(os.path.join(store, "v2"))
     # the store still serves: a fresh epoch dedups against history
@@ -216,7 +218,7 @@ def test_migrate_classic_store_to_manifest(spark, tmp_path):
     docs = _corpus(spark, 30, tag="migr")
     textdup_ingest_batch(spark, docs.filter("doc_id < 20"), store)
     live = migrate_store_to_manifest(store)
-    assert _manifest_version(store) == "v1" and live.endswith("v1")
+    assert manifest_version(store) == "v1" and live.endswith("v1")
     # idempotent
     assert migrate_store_to_manifest(store) == live
     # post-migration epoch still dedups against the migrated history
@@ -227,7 +229,7 @@ def test_migrate_classic_store_to_manifest(spark, tmp_path):
     )
     assert got == [801]
     compact_store(spark, store, id_col="doc_id", index_buckets=64)
-    assert _manifest_version(store) == "v2"
+    assert manifest_version(store) == "v2"
 
 
 # --------------------------------------------------------------------------
@@ -284,7 +286,7 @@ def test_pairstore_manifest_lifecycle_on_no_dir_rename_backend(
     docs = _corpus(spark, 30)
     build_pair_graph(spark, docs, store)
     for t in ("sigs", "pairs", "clusters"):
-        assert os.path.isfile(os.path.join(store, t, _CURRENT_FILE))
+        assert os.path.isfile(os.path.join(store, t, MANIFEST_CURRENT_FILE))
     # exact twins at i % 10 == 1; everything else is word-disjoint
     assert _sorted_pairs(spark, store) == [(0, 1), (10, 11), (20, 21)]
     base_groups = _cluster_groups(spark, store)
@@ -297,7 +299,7 @@ def test_pairstore_manifest_lifecycle_on_no_dir_rename_backend(
     assert (0, 1, 100) in _cluster_groups(spark, store)
     compact_pairstore(spark, store)
     for t in ("sigs", "pairs"):
-        cur = open(os.path.join(store, t, _CURRENT_FILE)).read().strip()
+        cur = open(os.path.join(store, t, MANIFEST_CURRENT_FILE)).read().strip()
         assert cur == "v2"
         assert not os.path.exists(os.path.join(store, t, "v1"))
     assert _sorted_pairs(spark, store) == [
@@ -364,12 +366,12 @@ def test_migrate_pairstore_to_manifest(spark, tmp_path):
     assert migrate_pairstore_to_manifest(store) == store
     assert migrate_pairstore_to_manifest(store) == store  # idempotent
     for t in ("sigs", "pairs", "clusters"):
-        cur = open(os.path.join(store, t, _CURRENT_FILE)).read().strip()
+        cur = open(os.path.join(store, t, MANIFEST_CURRENT_FILE)).read().strip()
         assert cur == "v1"
     assert (_sorted_pairs(spark, store), _cluster_groups(spark, store)) == before
     compact_pairstore(spark, store)
     assert (
-        open(os.path.join(store, "pairs", _CURRENT_FILE)).read().strip()
+        open(os.path.join(store, "pairs", MANIFEST_CURRENT_FILE)).read().strip()
         == "v2"
     )
     assert (_sorted_pairs(spark, store), _cluster_groups(spark, store)) == before
@@ -394,7 +396,7 @@ def test_pairstore_migration_resumes_after_crash(
     calls = {"n": 0}
 
     def flaky(self, path, text):
-        if os.path.basename(path) == _CURRENT_FILE:
+        if os.path.basename(path) == MANIFEST_CURRENT_FILE:
             calls["n"] += 1
             if calls["n"] == 2:
                 raise RuntimeError("simulated crash mid-migration")
@@ -408,7 +410,7 @@ def test_pairstore_migration_resumes_after_crash(
     monkeypatch.setattr(LocalStoreFS, "publish_text", real)
     migrate_pairstore_to_manifest(store)  # resumes: finishes the rest
     for t in ("sigs", "pairs", "clusters"):
-        assert os.path.isfile(os.path.join(store, t, _CURRENT_FILE))
+        assert os.path.isfile(os.path.join(store, t, MANIFEST_CURRENT_FILE))
     assert _sorted_pairs(spark, store) == want
 
 
@@ -444,11 +446,11 @@ def test_corpusstats_manifest_lifecycle_on_no_dir_rename_backend(
     d2 = _cdocs(spark, [(4, "a", "x q"), (5, "b", "q q r")])
     build_corpus_stats(spark, d1, store)
     for t in ("token_stats", "source_stats", "bigram_stats"):
-        assert os.path.isfile(os.path.join(store, t, _CURRENT_FILE))
+        assert os.path.isfile(os.path.join(store, t, MANIFEST_CURRENT_FILE))
     corpusstats_ingest_batch(spark, d2, store, 1)
     compact_corpus_stats(spark, store)
     for t in ("token_stats", "source_stats", "bigram_stats"):
-        cur = open(os.path.join(store, t, _CURRENT_FILE)).read().strip()
+        cur = open(os.path.join(store, t, MANIFEST_CURRENT_FILE)).read().strip()
         assert cur == "v2"
         assert not os.path.exists(os.path.join(store, t, "v1"))
     full = d1.unionByName(d2)
@@ -489,7 +491,7 @@ def test_migrate_corpusstats_to_manifest(spark, tmp_path):
     )
     compact_corpus_stats(spark, store)
     cur = open(
-        os.path.join(store, "token_stats", _CURRENT_FILE)
+        os.path.join(store, "token_stats", MANIFEST_CURRENT_FILE)
     ).read().strip()
     assert cur == "v2"
     assert (
@@ -532,7 +534,7 @@ def test_pairstore_migration_marker_crash_after_last_publish(
     and removed (storefs.refuse_mid_migration), no manual re-run
     needed."""
     from file_appender_spark.operators.pairstore import (
-        _MIGRATING_MARKER,
+        _STORE,
         build_pair_graph,
         migrate_pairstore_to_manifest,
         read_pairs,
@@ -542,18 +544,18 @@ def test_pairstore_migration_marker_crash_after_last_publish(
     build_pair_graph(spark, _corpus(spark, 12, tag="mk"), store)
     migrate_pairstore_to_manifest(store)
     # simulate the crash: every table published, marker back on disk
-    open(os.path.join(store, _MIGRATING_MARKER), "w").write("crash")
+    open(os.path.join(store, _STORE.migrating_marker), "w").write("crash")
     assert read_pairs(spark, store).count() >= 1  # self-heals
-    assert not os.path.exists(os.path.join(store, _MIGRATING_MARKER))
+    assert not os.path.exists(os.path.join(store, _STORE.migrating_marker))
     # a genuinely half-moved store (some manifest missing) still
     # refuses: recreate the marker and unpublish one table's manifest
-    open(os.path.join(store, _MIGRATING_MARKER), "w").write("crash")
-    os.remove(os.path.join(store, "clusters", _CURRENT_FILE))
+    open(os.path.join(store, _STORE.migrating_marker), "w").write("crash")
+    os.remove(os.path.join(store, "clusters", MANIFEST_CURRENT_FILE))
     with pytest.raises(ValueError, match="unfinished manifest migration"):
         read_pairs(spark, store)
     # the re-run republishes the missing manifest and clears the marker
     migrate_pairstore_to_manifest(store)
-    assert not os.path.exists(os.path.join(store, _MIGRATING_MARKER))
+    assert not os.path.exists(os.path.join(store, _STORE.migrating_marker))
     assert read_pairs(spark, store).count() >= 1
 
 
@@ -615,7 +617,7 @@ def test_migration_sweeps_base_level_write_artifacts(spark, tmp_path):
     """r11 ADVICE: a table root written directly by Spark leaves
     _SUCCESS and Hadoop .part-*.crc siblings at the table base; the
     migration loop skips '.'/'_' names when moving children into v1,
-    and clean_stale_manifest_versions only removes directories — so
+    and the manifest swap only removes directories — so
     without an explicit sweep these files sat at the base forever.
     After migration each table base holds only version dirs and the
     manifest file."""
@@ -709,7 +711,7 @@ def test_sigstore_migration_marker_refuses_and_resumes(spark, tmp_path):
     with pytest.raises(ValueError, match="unfinished manifest migration"):
         compact_store(spark, store, id_col="doc_id")
     live = migrate_store_to_manifest(store)  # resumes and finishes
-    assert _manifest_version(store) == "v1" and live.endswith("v1")
+    assert manifest_version(store) == "v1" and live.endswith("v1")
     assert not os.path.exists(os.path.join(store, _MIGRATING_MARKER))
     # crash between the publish and the marker removal: re-run cleans
     open(os.path.join(store, _MIGRATING_MARKER), "w").write("crash")

@@ -15,7 +15,13 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from file_appender_spark.storefs import ArrowStoreFS, LocalStoreFS, store_fs_for
+from file_appender_spark.storefs import (
+    ArrowStoreFS,
+    EpochStore,
+    LocalStoreFS,
+    manifest_version,
+    store_fs_for,
+)
 
 
 @pytest.fixture(params=["posix", "arrow"])
@@ -30,6 +36,17 @@ def mkstore(request, tmp_path):
 
     _mk.backend = request.param
     return _mk
+
+
+# a two-table store declared only for the EpochStore parity tests
+_EPOCHS = EpochStore(
+    tables=("t1", "t2"),
+    params_file="_TEST_PARAMS.json",
+    migrating_marker="_MIGRATING_TO_MANIFEST",
+    kind="test",
+    migrate_hint="migrate_test_to_manifest",
+    debris_suffixes=(".old", ".compacting"),
+)
 
 
 def test_store_fs_dispatch():
@@ -308,3 +325,59 @@ def test_neardup_embedding_store_both_backends(spark, mkstore):
 
     with pytest.raises(ValueError, match="LSH params"):
         neardup_ingest_batch(spark, dup, store, threshold=0.9, n_bits=8)
+
+
+def test_epoch_store_params_round_trip(mkstore):
+    """stamp_params/read_params through the parametrized backend: an
+    unstamped store reads None, a stamp reads back equal, and a
+    re-stamp replaces it."""
+    store = mkstore("es_params")
+    assert _EPOCHS.read_params(store) is None
+    _EPOCHS.stamp_params(store, {"b": 2, "a": [1, "x"]})
+    assert _EPOCHS.read_params(store) == {"b": 2, "a": [1, "x"]}
+    _EPOCHS.stamp_params(store, {"a": 1})
+    assert _EPOCHS.read_params(store) == {"a": 1}
+
+
+def test_epoch_store_recover_restores_classic_old(spark, mkstore):
+    """A crash between the classic swap's two renames leaves only the
+    ``.old`` backup; recover() renames it back, data intact."""
+    store = mkstore("es_recover")
+    fs = store_fs_for(store)
+    _EPOCHS.write_epoch(spark.range(3), store, "t1", "base")
+    base = _EPOCHS.table_base(store, "t1")
+    fs.rename(base, base + ".old")
+    _EPOCHS.recover(store)
+    assert fs.exists(base) and not fs.exists(base + ".old")
+    assert spark.read.parquet(base).count() == 3
+
+
+@pytest.mark.parametrize("layout", ["classic", "manifest"])
+def test_epoch_store_compact_swap(spark, mkstore, layout):
+    """compact_swap folds every epoch partition into one sized
+    ``batch=base`` partition: in place by the two-rename swap on a
+    classic table (no ``.old``/``.compacting`` left behind), as the
+    next version dir plus one manifest flip on a manifest table (the
+    old version deleted)."""
+    store = mkstore(f"es_compact_{layout}")
+    fs = store_fs_for(store)
+    if layout == "manifest":
+        _EPOCHS.create_manifest(store)
+    for lo, e in ((0, "base"), (5, "1"), (8, "2")):
+        _EPOCHS.write_epoch(spark.range(lo, lo + 3), store, "t1", e)
+    live = _EPOCHS.live_dir(store, "t1")
+    merged = spark.read.parquet(live).drop("batch")
+    _EPOCHS.compact_swap(store, "t1", merged, 2)
+
+    base = _EPOCHS.table_base(store, "t1")
+    new_live = _EPOCHS.live_dir(store, "t1")
+    parts = [p for p in fs.listdir(new_live) if not p.startswith((".", "_"))]
+    assert parts == ["batch=base"]
+    got = sorted(r["id"] for r in spark.read.parquet(new_live).collect())
+    assert got == [0, 1, 2, 5, 6, 7, 8, 9, 10]
+    if layout == "manifest":
+        assert manifest_version(base) == "v2" and not fs.exists(live)
+    else:
+        assert new_live == base
+        assert not fs.exists(base + ".old")
+        assert not fs.exists(base + ".compacting")
